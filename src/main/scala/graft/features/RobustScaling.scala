@@ -157,11 +157,6 @@ object RobustScaling {
     scaled.foldLeft(df) { case (acc, (name, expr)) => acc.withColumn(name, expr) }
   }
 
-  /** Exact-percentile variant whose results hash-match a DuckDB
-    * `quantile_cont` oracle (SURVEY.md Q5). */
-  def exactScaling(df: DataFrame, columns: Seq[String]): DataFrame =
-    apply(df, columns, exact = true)
-
   /** Winsorization: clip each selected column into its `[lo, hi]`
     * quantile range, appended as `{col}_wins` — the outlier treatment a
     * feature pipeline applies when it wants to KEEP extreme rows but

@@ -790,25 +790,11 @@ object Curate {
         col("tokens_through"))
   }
 
-  /** [[apply]] plus fuzzy near-dup suppression (minhash) — the full
-    * at-scale recipe; not SQL-expressible (seeded banding), verified by
-    * invariants on the component operators. */
-  def withNearDedup(
-      docs: DataFrame,
-      minQuality: Double = 0.1,
-      langs: Seq[String] = Seq("en"),
-      minJaccard: Double = 0.8,
-      textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    val exactStage = apply(docs, minQuality, langs, textCol, idCol)
-    val keptDocs = docs.join(exactStage.select(idCol), Seq(idCol), "left_semi")
-    Dedup.minhash(keptDocs, textCol, idCol, minJaccard = minJaccard)
-  }
-
   /** Contrastive training pairs: each (anchor, positive) link — e.g.
-    * the verified near-dup edges [[Dedup.minhashStar]] emits — joined
-    * with `negPerAnchor` DETERMINISTIC negatives drawn by bucketed
-    * hash-rank sampling, no RNG and no cross join anywhere.
+    * verified near-dup star links ([[Dedup.minhashStarFromBandKeys]]
+    * checked by [[Dedup.ngramJaccard]]) — joined with `negPerAnchor`
+    * DETERMINISTIC negatives drawn by bucketed hash-rank sampling, no
+    * RNG and no cross join anywhere.
     *
     * The sampler: every doc lands in one of `nBuckets` md5 buckets;
     * each anchor is assigned a pseudo-random TARGET bucket (the

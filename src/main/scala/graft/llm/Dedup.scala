@@ -1,7 +1,6 @@
 package graft.llm
 
 import graft.functions.{CosineSimilarity, HyperplaneSignature, MinhashSignature, WordNgrams}
-import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -148,14 +147,27 @@ object Dedup extends DedupPassages with DedupLines {
     * the two inputs are canonically identical subtrees and the band-
     * key pipeline computes ONCE (ReusedExchange — the
     * [[simhashCandidates]] reuse note applies verbatim). */
-  private def bandedCandidates(banded: DataFrame, idCol: String): DataFrame = {
-    val x = banded.alias("x")
-    val y = banded.alias("y")
-    x.join(y, col("x.bk") === col("y.bk") &&
+  private def bandedCandidates(banded: DataFrame, idCol: String): DataFrame =
+    withinCandidates(banded, idCol).distinct()
+
+  /** Bucket-mate id pairs `(id_a < id_b)` of one band-key frame, one
+    * row per shared bucket — [[bandedCandidates]] before its distinct,
+    * and the within-batch candidates of the incremental operators. */
+  private def withinCandidates(banded: DataFrame, idCol: String): DataFrame =
+    banded.alias("x")
+      .join(banded.alias("y"), col("x.bk") === col("y.bk") &&
         col(s"x.$idCol") < col(s"y.$idCol"))
       .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-      .distinct()
-  }
+
+  /** Batch × history bucket-mate pairs `(batch id_a, history id_b)`,
+    * one row per shared bucket — the cross candidates of the
+    * incremental operators. */
+  private def crossCandidates(batchBands: DataFrame, histBands: DataFrame,
+      idCol: String): DataFrame =
+    batchBands.alias("x")
+      .join(histBands.select(col(idCol), col("bk")).alias("y"),
+        col("x.bk") === col("y.bk"))
+      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
 
   /** The `(numHashes, bands)` auto-derivation for the MinHash family —
     * the Jaccard twin of `lshKnobs` (embedding side), opt-in by passing
@@ -228,41 +240,61 @@ object Dedup extends DedupPassages with DedupLines {
       idCol: String = "doc_id",
       numHashes: Int = 64,
       bands: Int = 16,
-      seed: Long = 42L): DataFrame = {
+      seed: Long = 42L): DataFrame =
+    bandKeysFromSigs(
+      minhashSignatures(df, textCol, idCol, numHashes, seed,
+        withShingles = false),
+      idCol, numHashes, bands)
+
+  /** THE minhash signature projection: `(idCol, [sh,] sig)` per doc
+    * with at least one shingle. `sig` is the codegen'd per-row
+    * [[MinhashSignature]] — one string hash per shingle + numHashes
+    * long-mixes into a reused accumulator, bit-identical to (and ~an
+    * order of magnitude cheaper than) the interpreted
+    * aggregate/zip_with/xxhash64 fold it replaces; min() is
+    * duplicate-insensitive, so set semantics still cost nothing.
+    * `withShingles` adds `sh`, the SORTED-distinct shingle set (r16):
+    * per-pair verification is then a zero-allocation merge scan (the
+    * SortedIntersectCount kernel) instead of a per-pair hash set —
+    * Jaccard is set arithmetic, so sorting changes nothing the oracle
+    * sees. */
+  private def minhashSignatures(
+      docs: DataFrame,
+      textCol: String,
+      idCol: String,
+      numHashes: Int,
+      seed: Long,
+      withShingles: Boolean): DataFrame = {
+    val sh = if (!withShingles) Nil
+      else Seq(array_sort(array_distinct(col("shingles"))).as("sh"))
+    shingled(docs.select(col(idCol), col(textCol)), textCol, idCol)
+      .select(col(idCol) +: sh :+
+        MinhashSignature(col("shingles"), numHashes, seed).as("sig"): _*)
+  }
+
+  /** THE minhash band-key column — the ONE recipe persisted history
+    * tables (bucketed by `bk`), the streaming keeper's state and the
+    * batch star-first paths all collide on, so they must stay
+    * bit-identical: explode of one flat 64-bit `xxhash64(band index,
+    * the band's numHashes/bands signature rows)` per band. `sig` is an
+    * attribute where this is applied, so element_at reads are O(1) —
+    * no outer-expression duplication into the banding projection. */
+  private def bandKeys(numHashes: Int, bands: Int): Column = {
     require(numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes)")
     val rowsPerBand = numHashes / bands
-    val docs = df.select(col(idCol), col(textCol))
-    // codegen'd per-row signature: one string hash per shingle +
-    // numHashes long-mixes into a reused accumulator — bit-identical
-    // to (and ~an order of magnitude cheaper than) the interpreted
-    // aggregate/zip_with/xxhash64 fold it replaces; min() is
-    // duplicate-insensitive, so set semantics still cost nothing
-    val sigs = shingled(docs, textCol, idCol)
-      .select(col(idCol),
-        MinhashSignature(col("shingles"), numHashes, seed).as("sig"))
-    // band key = hash of (band index, the band's signature rows);
-    // sig is an attribute here, so element_at reads are O(1) — no
-    // outer-expression duplication into the banding projection
-    sigs.select(col(idCol),
-      explode(array((0 until bands).map { b =>
-        val rows = (0 until rowsPerBand).map(r =>
-          element_at(col("sig"), b * rowsPerBand + r + 1))
-        xxhash64(lit(b) +: rows: _*)
-      }: _*)).as("bk"))
-      // explicit exchange on the join key: a self-join's two sides are
-      // canonically identical subtrees ending in this shuffle, so
-      // ReusedExchange computes the signature pipeline ONCE and replays
-      // the (compact) banded rows for both sides — without it each side
-      // re-scans and re-hashes the corpus
-      .repartition(col("bk"))
+    explode(array((0 until bands).map { b =>
+      val rows = (0 until rowsPerBand).map(r =>
+        element_at(col("sig"), b * rowsPerBand + r + 1))
+      xxhash64(lit(b) +: rows: _*)
+    }: _*)).as("bk")
   }
 
   /** Incremental NEAR-dup dedup — the fuzzy twin of
     * [[exactIncremental]]: returns the rows of `newDocs` that survive
     * dropping (a) every batch doc minhash-near (Jaccard ≥ `minJaccard`)
     * ANY historical doc, and (b) the larger-id member of every near-dup
-    * pair WITHIN the batch (greedy suppression, like [[minhash]]).
+    * pair WITHIN the batch (greedy smaller-id-wins suppression).
     * Ids must be globally unique across batch and history (true of any
     * append-only doc pipeline).
     *
@@ -289,44 +321,60 @@ object Dedup extends DedupPassages with DedupLines {
       minJaccard: Double = 0.5,
       seed: Long = 42L,
       histBands: Option[DataFrame] = None): DataFrame = {
-    require(histBands.isEmpty || (numHashes > 0 && bands > 0),
-      "histBands requires explicit numHashes and bands — the persisted " +
-        "keys are only comparable under the exact knobs that built them")
-    // auto-knobs (either 0) derive from the HISTORY count — the big
-    // side bounds spurious-candidate mass, as in embeddingIncremental
-    val (nh, nb) = minhashKnobs(
-      histDocs.select(col(idCol)).count(), minJaccard, numHashes, bands)
-    val batchBands = minhashBandKeys(
-      newDocs, textCol, idCol, nh, nb, seed)
-    val hb = histBands.getOrElse(minhashBandKeys(
-      histDocs, textCol, idCol, nh, nb, seed))
+    val (batchBands, hb) = incrementalBandKeys(newDocs, histDocs, textCol,
+      idCol, numHashes, bands, minJaccard, seed, histBands)
     // both candidate joins consume the SAME batch band-key subtree
     // (ReusedExchange computes the batch signatures once); a naive
     // minhashPairs(newDocs) call here would rebuild the whole pipeline
-    val cross = batchBands.alias("x")
-      .join(hb.select(col(idCol), col("bk")).alias("y"),
-        col("x.bk") === col("y.bk"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-    val within = batchBands.alias("x")
-      .join(batchBands.alias("y"), col("x.bk") === col("y.bk") &&
-        col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
     val allDocs = newDocs.select(col(idCol), col(textCol))
       .unionByName(histDocs.select(col(idCol), col(textCol)))
-    // ONE verification pass over the unioned candidate set. Pair kinds
-    // are distinguished by id_b (ids are globally unique): id_b in the
-    // batch ⇒ within pair, its id_b loses (greedy smaller-id-wins);
-    // id_b in history ⇒ cross pair, its batch-side id_a loses
+    // ONE verification pass over the unioned candidate set
     val verified = ngramJaccard(allDocs,
-        cross.unionByName(within).distinct(), textCol = textCol,
-        idCol = idCol)
+        crossCandidates(batchBands, hb, idCol)
+          .unionByName(withinCandidates(batchBands, idCol)).distinct(),
+        textCol = textCol, idCol = idCol)
       .filter(col("jaccard") >= minJaccard)
-    val batchIdsB = newDocs.select(col(idCol).as("id_b"))
+    incrementalSurvivors(newDocs, newDocs, verified, idCol)
+  }
+
+  /** The set-up [[minhashIncremental]] and [[minhashIncrementalStarFirst]]
+    * share: `(batch band keys, history band keys)` under one knob pair.
+    * Auto-knobs (either 0) derive from the HISTORY count — the big side
+    * bounds spurious-candidate mass, as in embeddingIncremental. */
+  private def incrementalBandKeys(
+      newDocs: DataFrame,
+      histDocs: DataFrame,
+      textCol: String,
+      idCol: String,
+      numHashes: Int,
+      bands: Int,
+      minJaccard: Double,
+      seed: Long,
+      histBands: Option[DataFrame]): (DataFrame, DataFrame) = {
+    require(histBands.isEmpty || (numHashes > 0 && bands > 0),
+      "histBands requires explicit numHashes and bands — the persisted " +
+        "keys are only comparable under the exact knobs that built them")
+    val (nh, nb) = minhashKnobs(
+      histDocs.select(col(idCol)).count(), minJaccard, numHashes, bands)
+    (minhashBandKeys(newDocs, textCol, idCol, nh, nb, seed),
+      histBands.getOrElse(minhashBandKeys(
+        histDocs, textCol, idCol, nh, nb, seed)))
+  }
+
+  /** The incremental keep rule over ONE verified candidate set holding
+    * both pair kinds, told apart by id_b (ids are globally unique):
+    * id_b in the batch ⇒ within pair, its id_b loses (greedy
+    * smaller-id-wins); id_b in history ⇒ cross pair, its batch-side
+    * id_a loses. Returns the `batch` rows that lose neither way;
+    * `batchIds` is the batch's `idCol` frame the split tests against. */
+  private def incrementalSurvivors(batch: DataFrame, batchIds: DataFrame,
+      verified: DataFrame, idCol: String): DataFrame = {
+    val batchIdsB = batchIds.select(col(idCol).as("id_b"))
     val withinLosers = verified.join(batchIdsB, Seq("id_b"), "left_semi")
       .select(col("id_b").as(idCol))
     val crossLosers = verified.join(batchIdsB, Seq("id_b"), "left_anti")
       .select(col("id_a").as(idCol))
-    newDocs.join(withinLosers.union(crossLosers).distinct(),
+    batch.join(withinLosers.union(crossLosers).distinct(),
       Seq(idCol), "left_anti")
   }
 
@@ -357,10 +405,10 @@ object Dedup extends DedupPassages with DedupLines {
     * batch-style "band first, join texts back for the candidates"
     * would be a stream-stream self-join (watermark state on both
     * sides) for no benefit. Band keys are bit-identical to
-    * [[minhashBandKeys]] (same raw-shingle [[MinhashSignature]], same
-    * xxhash64 banding), so the bucket structure — and with it the
+    * [[minhashBandKeys]] (the same [[minhashSignatures]] and
+    * [[bandKeys]] recipe), so the bucket structure — and with it the
     * star-link drop set — matches the batch family exactly; `sh` is
-    * the array_distinct the verification arithmetic
+    * the sorted-distinct set the verification arithmetic
     * ([[ngramJaccard]]'s) expects. Streaming-safe: a narrow projection
     * + explode, no repartition (the downstream groupByKey shuffles on
     * the band key anyway). */
@@ -370,63 +418,10 @@ object Dedup extends DedupPassages with DedupLines {
       idCol: String = "doc_id",
       numHashes: Int = 64,
       bands: Int = 16,
-      seed: Long = 42L): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes)")
-    val rowsPerBand = numHashes / bands
-    // sh is SORTED-distinct (r16): the streaming keeper's per-pair
-    // verification is then a zero-allocation merge scan (the
-    // SortedIntersectCount kernel) instead of a per-pair hash set —
-    // Jaccard is set arithmetic, so sorting changes nothing the
-    // oracle sees
-    val sigs = shingled(docs.select(col(idCol), col(textCol)), textCol, idCol)
-      .select(col(idCol),
-        array_sort(array_distinct(col("shingles"))).as("sh"),
-        MinhashSignature(col("shingles"), numHashes, seed).as("sig"))
-    sigs.select(col(idCol), col("sh"),
-      explode(array((0 until bands).map { b =>
-        val rows = (0 until rowsPerBand).map(r =>
-          element_at(col("sig"), b * rowsPerBand + r + 1))
-        xxhash64(lit(b) +: rows: _*)
-      }: _*)).as("bk"))
-  }
-
-  /** MLlib MinHashLSH variant (HashingTF sparse vectors +
-    * approxSimilarityJoin), kept as the recall cross-check for
-    * [[minhashPairs]] — same equi-join scale shape, heavier constants
-    * (interpreted keyDistance on 2^20-dim sparse vectors).
-    * Returns (id_a, id_b, jaccard_dist) with id_a < id_b. */
-  def minhashPairsLsh(
-      df: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      numHashTables: Int = 8,
-      jaccardDist: Double = 0.6,
-      seed: Long = 42L): DataFrame = {
-    val vectorized = new HashingTF()
-      .setInputCol("shingles").setOutputCol("features")
-      .setBinary(true).setNumFeatures(1 << 20)
-      .transform(shingled(df.select(col(idCol), col(textCol)), textCol, idCol))
-    val lsh = new MinHashLSH().setNumHashTables(numHashTables)
-      .setInputCol("features").setOutputCol("hashes").setSeed(seed)
-    val model = lsh.fit(vectorized)
-    model.approxSimilarityJoin(vectorized, vectorized, jaccardDist, "jaccard_dist")
-      .select(
-        col(s"datasetA.$idCol").as("id_a"),
-        col(s"datasetB.$idCol").as("id_b"),
-        col("jaccard_dist"))
-      .filter(col("id_a") < col("id_b"))
-  }
-
-  /** MinHash dedup: drop every doc that is minhash-near a doc with a
-    * smaller id (greedy single-pass suppression — the standard
-    * at-scale approximation of connected-component dedup). */
-  def minhash(df: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", minJaccard: Double = 0.5): DataFrame = {
-    val losers = minhashPairs(df, textCol, idCol, minJaccard = minJaccard)
-      .select(col("id_b").as(idCol)).distinct()
-    df.join(losers, Seq(idCol), "left_anti")
-  }
+      seed: Long = 42L): DataFrame =
+    minhashSignatures(docs, textCol, idCol, numHashes, seed,
+        withShingles = true)
+      .select(col(idCol), col("sh"), bandKeys(numHashes, bands))
 
   /** Connected-component labels over an undirected `(id_a, id_b)` edge
     * frame: every node is labeled with the SMALLEST id reachable from
@@ -465,8 +460,7 @@ object Dedup extends DedupPassages with DedupLines {
     * If the label propagation has not converged after `maxIter` rounds
     * (rounds needed = graph diameter), the call falls back to
     * [[connectedComponentsStar]], whose round count is O(log n)
-    * regardless of diameter — set `starFallback = false` to get the
-    * fail-fast IllegalStateException instead.
+    * regardless of diameter.
     *
     * Lifecycle: the RETURNED frame is backed by the final round's
     * checkpoint blocks (its lineage is truncated — that is what makes
@@ -478,8 +472,7 @@ object Dedup extends DedupPassages with DedupLines {
     * the context cleaner reclaim them as rounds are unpersisted, or
     * delete the directory after the job. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-      checkpointDir: Option[String] = None,
-      starFallback: Boolean = true): DataFrame = {
+      checkpointDir: Option[String] = None): DataFrame = {
     val edges = persistRound(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
@@ -531,14 +524,8 @@ object Dedup extends DedupPassages with DedupLines {
       // path nothing ever consumes them again, and leaving the blocks
       // pinned would leak one corpus-node-sized cache per fallback
       labels.unpersist()
-      if (starFallback)
-        return connectedComponentsStar(pairs, checkpointDir = checkpointDir)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          s"($changed labels still changing); the graph diameter exceeds " +
-          "maxIter — raise it, or use connectedComponentsStar")
-    }
-    labels
+      connectedComponentsStar(pairs, checkpointDir = checkpointDir)
+    } else labels
   }
 
   /** Connected components by alternating large-star/small-star
@@ -566,8 +553,8 @@ object Dedup extends DedupPassages with DedupLines {
     * as self-pairs (id_a == id_b), which label themselves. Same
     * lifecycle as [[connectedComponents]]: the returned frame is
     * checkpoint-backed; `.unpersist()` it when consumed. */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
+  private[graft] def connectedComponentsStar(pairs: DataFrame,
+      maxIter: Int = 20, checkpointDir: Option[String] = None): DataFrame = {
     var edges = persistRound(
       pairs.select(greatest(col("id_a"), col("id_b")).as("src"),
           least(col("id_a"), col("id_b")).as("dst"))
@@ -605,8 +592,6 @@ object Dedup extends DedupPassages with DedupLines {
       iter += 1
     }
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc-star] converged=$converged after $iter rounds")
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge in $maxIter rounds — " +
@@ -719,9 +704,6 @@ object Dedup extends DedupPassages with DedupLines {
     val conf = spark.conf
     val prevParts = conf.get("spark.sql.shuffle.partitions")
     val p = math.max(1, materialized.rdd.getNumPartitions)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc-loop] materialized partitions p=$p " +
-        s"(session shuffle.partitions=$prevParts)")
     try {
       conf.set("spark.sql.shuffle.partitions",
         math.min(p, spark.sparkContext.defaultParallelism).toString)
@@ -732,42 +714,52 @@ object Dedup extends DedupPassages with DedupLines {
   }
 
   /** MinHash dedup by connected components: drops every doc whose
-    * component has a smaller member — the transitive-closure-correct
-    * alternative to [[minhash]]'s greedy suppression (keeps exactly one
-    * doc per near-dup CLUSTER, even through chains A~B~C where A≁C). */
+    * component has a smaller member — transitive-closure-correct
+    * (keeps exactly one doc per near-dup CLUSTER, even through chains
+    * A~B~C where A≁C). */
   def minhashConnected(df: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", minJaccard: Double = 0.5): DataFrame = {
-    val comps = connectedComponents(
-      minhashPairs(df, textCol, idCol, minJaccard = minJaccard))
-    val losers = comps.filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
+      idCol: String = "doc_id", minJaccard: Double = 0.5): DataFrame =
+    keepMin(df, connectedComponents(
+      minhashPairs(df, textCol, idCol, minJaccard = minJaccard)), idCol)
 
   /** [[minhashConnected]] keeping the BEST-scoring member of each
     * cluster instead of the smallest id — what a production dedup
     * actually ships (among near-copies, keep the highest-quality /
     * longest / most-recent one; `scoreCol`, ties to the smaller id).
     * Cluster membership is identical to [[minhashConnected]]; only the
-    * keep rule changes: one candidate-bounded window over the cluster
-    * members picks the winner (WindowGroupLimit shape — the member
-    * set is pairs-bounded, never corpus-bounded). */
+    * keep rule changes ([[keepBest]]). */
   def minhashConnectedBest(
       df: DataFrame,
       scoreCol: String,
       textCol: String = "text",
       idCol: String = "doc_id",
-      minJaccard: Double = 0.5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val comps = connectedComponents(
-      minhashPairs(df, textCol, idCol, minJaccard = minJaccard))
+      minJaccard: Double = 0.5): DataFrame =
+    keepBest(df, connectedComponents(
+      minhashPairs(df, textCol, idCol, minJaccard = minJaccard)),
+      scoreCol, idCol)
+
+  /** The keep-min cluster rule over `(id, component)` labels: drops
+    * every `df` row whose component has a smaller member. */
+  private def keepMin(df: DataFrame, comps: DataFrame,
+      idCol: String): DataFrame =
+    df.join(comps.filter(col("id") =!= col("component"))
+        .select(col("id").as(idCol)),
+      Seq(idCol), "left_anti")
+
+  /** The keep-best cluster rule over `(id, component)` labels: keeps the
+    * highest-`scoreCol` member of each component (ties to the smaller
+    * id) and drops the rest. One candidate-bounded window over the
+    * cluster members picks the winner (WindowGroupLimit shape — the
+    * member set is pairs-bounded, never corpus-bounded). */
+  private def keepBest(df: DataFrame, comps: DataFrame, scoreCol: String,
+      idCol: String): DataFrame = {
     val members = comps
       .join(df.select(col(idCol).as("id"), col(scoreCol).as("_score")),
         "id")
     val w = Window.partitionBy(col("component"))
       .orderBy(col("_score").desc, col("id"))
     val losers = members
-      .withColumn("_rk", org.apache.spark.sql.functions.row_number().over(w))
+      .withColumn("_rk", row_number().over(w))
       .filter(col("_rk") =!= 1)
       .select(col("id").as(idCol))
     df.join(losers, Seq(idCol), "left_anti")
@@ -794,31 +786,23 @@ object Dedup extends DedupPassages with DedupLines {
       idCol: String,
       numHashes: Int,
       seed: Long): DataFrame =
-    shingled(docs, textCol, idCol)
-      .select(col(idCol),
-        array_sort(array_distinct(col("shingles"))).as("sh"),
-        MinhashSignature(col("shingles"), numHashes, seed).as("sig"))
-      .localCheckpoint(false)
+    minhashSignatures(docs, textCol, idCol, numHashes, seed,
+      withShingles = true).localCheckpoint(false)
 
-  /** [[minhashBandKeys]]'s banding stage over a [[minhashBase]] frame —
-    * same band-key derivation from the signature column, same explicit
-    * exchange on `bk` (the self-join ReusedExchange contract). */
+  /** The banding stage over a signature frame ([[minhashSignatures]],
+    * [[minhashBase]]): the [[bandKeys]] rows plus an explicit exchange
+    * on the join key — a self-join's two sides are canonically
+    * identical subtrees ending in this shuffle, so ReusedExchange
+    * computes the signature pipeline ONCE and replays the (compact)
+    * banded rows for both sides; without it each side re-scans and
+    * re-hashes the corpus. */
   private def bandKeysFromSigs(
-      base: DataFrame,
+      sigs: DataFrame,
       idCol: String,
       numHashes: Int,
-      bands: Int): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes)")
-    val rowsPerBand = numHashes / bands
-    base.select(col(idCol),
-      explode(array((0 until bands).map { b =>
-        val rows = (0 until rowsPerBand).map(r =>
-          element_at(col("sig"), b * rowsPerBand + r + 1))
-        xxhash64(lit(b) +: rows: _*)
-      }: _*)).as("bk"))
+      bands: Int): DataFrame =
+    sigs.select(col(idCol), bandKeys(numHashes, bands))
       .repartition(col("bk"))
-  }
 
   /** Threshold-aware verification over a shared `(idCol, sh)` frame:
     * [[jaccardOverShingleFrame]] with (a) an EXACT size prescreen —
@@ -851,51 +835,6 @@ object Dedup extends DedupPassages with DedupLines {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** STAR-reduced MinHash linking — the Jaccard twin of
-    * [[simhashStarFromFingerprints]], closing the r12 verdict's one
-    * remaining quadratic mechanism: on a high-duplication corpus every
-    * replica group of size m lands in the same band buckets and the
-    * [[minhashPairs]] self-join emits all C(m,2) candidates —
-    * quadratic in the duplication rate (the r11 sf1 rehearsal measured
-    * the pairs row 12× at 10× data on a ~90%-duplicated corpus; raw
-    * CommonCrawl runs ~80% duplicates). For keep-min dedup those pairs
-    * are redundant: linking each banded row to its bucket's prefix
-    * MINIMUM and its bucket PREDECESSOR marks the same non-keeper set
-    * on duplicate mass — near-identical docs share (nearly) all
-    * buckets, so a replica group sits contiguously by id in each, and
-    * ~2(m−1) star/chain links replace C(m,2). ONE sorted window pass
-    * over the banded rows (a single hash shuffle on the band key)
-    * generates ≤ 2 links per banded row; exact n-gram Jaccard then
-    * verifies ONLY the linked candidates ([[ngramJaccard]] — unlike
-    * simhash, the sketch carries no in-row distance, so verification
-    * is the text join, still linear in banded rows).
-    *
-    * Contract vs [[minhashPairs]]: returns (id_a < id_b, jaccard)
-    * LINKS, a SUBSET of the pair relation sufficient for keep-min
-    * dedup — never a false link (every link passes exact Jaccard ≥
-    * `minJaccard`), but a doc whose bucket min AND bucket predecessor
-    * are both far-Jaccard coincidences in EVERY one of its buckets can
-    * escape (DedupSpec measures coverage on the replicated fixture;
-    * [[minhashPairs]] stays the exhaustive ground truth for
-    * low-duplication corpora). For cluster structure, predecessor
-    * chains span each bucket — feed the links to
-    * [[connectedComponents]]. */
-  def minhashStar(
-      df: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      numHashes: Int = 64,
-      bands: Int = 16,
-      minJaccard: Double = 0.5,
-      seed: Long = 42L): DataFrame = {
-    val docs = df.select(col(idCol), col(textCol))
-    val (nh, nb) = minhashKnobs(docs.count(), minJaccard, numHashes, bands)
-    val base = minhashBase(docs, textCol, idCol, nh, seed)
-    verifiedAtLeast(base.select(col(idCol), col("sh")),
-      minhashStarFromBandKeys(bandKeysFromSigs(base, idCol, nh, nb), idCol),
-      idCol, minJaccard)
-  }
-
   /** The UNVERIFIED star candidate links `(id_a < id_b)` from a
     * [[minhashBandKeys]] frame: per band bucket, each row links to the
     * bucket's prefix minimum and its immediate predecessor — both from
@@ -903,6 +842,21 @@ object Dedup extends DedupPassages with DedupLines {
     * link keeps replica CHAINS connected when an unrelated smaller id
     * coincidentally lands in the bucket and becomes its min (the
     * [[simhashStarFromFingerprints]] linking rationale verbatim).
+    *
+    * Why star links: on a high-duplication corpus every replica group
+    * of size m lands in the same band buckets and the [[minhashPairs]]
+    * self-join emits all C(m,2) candidates — quadratic in the
+    * duplication rate (the r11 sf1 rehearsal measured the pairs row
+    * 12× at 10× data on a ~90%-duplicated corpus). For keep-min dedup
+    * those pairs are redundant: a replica group sits contiguously by
+    * id in each shared bucket, so ~2(m−1) star/chain links mark the
+    * same non-keeper set. Verified with exact Jaccard, the links are a
+    * SUBSET of the pair relation sufficient for keep-min dedup — never
+    * a false link, but a doc whose bucket min AND predecessor are both
+    * far-Jaccard coincidences in EVERY one of its buckets can escape
+    * (DedupSpec measures coverage on the replicated fixture). The
+    * star-first compositions below are built on them.
+    *
     * Public for the persisted-band-keys pipeline: a nightly job that
     * keeps its history banded ([[graft.sources.Sources.writeBucketed]])
     * can star-link a day's corpus without re-deriving keys. Callers
@@ -925,26 +879,6 @@ object Dedup extends DedupPassages with DedupLines {
       .select("id_a", "id_b")
       .distinct()
   }
-
-  /** Keep-min STAR COLLAPSE — [[minhashStar]]'s verified links applied
-    * as a dedup: drops every doc with a link to a SMALLER id at
-    * Jaccard ≥ `minJaccard`, returns the surviving `df` rows
-    * unchanged. Removes the replica mass in LINEAR time at any
-    * duplication rate; the survivors are replica-free, which is what
-    * makes a subsequent exhaustive pair pass affordable
-    * ([[minhashPairsStarFirst]]). */
-  def minhashStarCollapse(
-      df: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      numHashes: Int = 64,
-      bands: Int = 16,
-      minJaccard: Double = 0.5,
-      seed: Long = 42L): DataFrame =
-    df.join(
-      minhashStar(df, textCol, idCol, numHashes, bands, minJaccard, seed)
-        .select(col("id_b").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
 
   /** The PRODUCTION minhash pair relation (the [[simhashPairsStarFirst]]
     * recipe on the Jaccard side): star-collapse the near-identical
@@ -1065,6 +999,26 @@ object Dedup extends DedupPassages with DedupLines {
     links.unionByName(survPairs).distinct()
   }
 
+  /** The components stage the star-first cluster operators share:
+    * knobs, one [[minhashBase]] tokenization, the
+    * [[minhashStarFirstEdges]] edge set, and [[connectedComponents]]
+    * labels `(id, component)` over it. */
+  private def minhashComponents(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      numHashes: Int,
+      bands: Int,
+      minJaccard: Double,
+      seed: Long): DataFrame = {
+    val docs = df.select(col(idCol), col(textCol))
+    val (nh, nb) = minhashKnobs(docs.count(), minJaccard, numHashes, bands)
+    val base = minhashBase(docs, textCol, idCol, nh, seed)
+    connectedComponents(
+      minhashStarFirstEdges(base.select(col(idCol), col("sh")),
+        bandKeysFromSigs(base, idCol, nh, nb), idCol, minJaccard))
+  }
+
   /** [[minhashConnected]] in the production star-first shape: cluster
     * edges = verified star links ∪ survivor pairs (see
     * [[minhashStarFirstEdges]]), components, keep the smallest id per
@@ -1077,17 +1031,9 @@ object Dedup extends DedupPassages with DedupLines {
       numHashes: Int = 64,
       bands: Int = 16,
       minJaccard: Double = 0.5,
-      seed: Long = 42L): DataFrame = {
-    val docs = df.select(col(idCol), col(textCol))
-    val (nh, nb) = minhashKnobs(docs.count(), minJaccard, numHashes, bands)
-    val base = minhashBase(docs, textCol, idCol, nh, seed)
-    val comps = connectedComponents(
-      minhashStarFirstEdges(base.select(col(idCol), col("sh")),
-        bandKeysFromSigs(base, idCol, nh, nb), idCol, minJaccard))
-    val losers = comps.filter(col("id") =!= col("component"))
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
+      seed: Long = 42L): DataFrame =
+    keepMin(df, minhashComponents(df, textCol, idCol, numHashes, bands,
+      minJaccard, seed), idCol)
 
   /** [[minhashConnectedBest]] in the star-first shape: same edge set
     * as [[minhashConnectedStarFirst]], production keep rule — the
@@ -1104,24 +1050,9 @@ object Dedup extends DedupPassages with DedupLines {
       numHashes: Int = 64,
       bands: Int = 16,
       minJaccard: Double = 0.5,
-      seed: Long = 42L): DataFrame = {
-    val docs = df.select(col(idCol), col(textCol))
-    val (nh, nb) = minhashKnobs(docs.count(), minJaccard, numHashes, bands)
-    val base = minhashBase(docs, textCol, idCol, nh, seed)
-    val comps = connectedComponents(
-      minhashStarFirstEdges(base.select(col(idCol), col("sh")),
-        bandKeysFromSigs(base, idCol, nh, nb), idCol, minJaccard))
-    val members = comps
-      .join(df.select(col(idCol).as("id"), col(scoreCol).as("_score")),
-        "id")
-    val w = Window.partitionBy(col("component"))
-      .orderBy(col("_score").desc, col("id"))
-    val losers = members
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") =!= 1)
-      .select(col("id").as(idCol))
-    df.join(losers, Seq(idCol), "left_anti")
-  }
+      seed: Long = 42L): DataFrame =
+    keepBest(df, minhashComponents(df, textCol, idCol, numHashes, bands,
+      minJaccard, seed), scoreCol, idCol)
 
   /** SOFT dedup — per-doc training weights from the near-dup cluster
     * structure instead of dropping rows (round 18): every doc gets
@@ -1152,12 +1083,8 @@ object Dedup extends DedupPassages with DedupLines {
       bands: Int = 16,
       minJaccard: Double = 0.5,
       seed: Long = 42L): DataFrame = {
-    val docs = df.select(col(idCol), col(textCol))
-    val (nh, nb) = minhashKnobs(docs.count(), minJaccard, numHashes, bands)
-    val base = minhashBase(docs, textCol, idCol, nh, seed)
-    val comps = connectedComponents(
-      minhashStarFirstEdges(base.select(col(idCol), col("sh")),
-        bandKeysFromSigs(base, idCol, nh, nb), idCol, minJaccard))
+    val comps = minhashComponents(df, textCol, idCol, numHashes, bands,
+      minJaccard, seed)
     val sizes = comps.groupBy(col("component"))
       .agg(count(lit(1)).as("cluster_size"))
     val m = comps.join(sizes, "component")
@@ -1194,11 +1121,8 @@ object Dedup extends DedupPassages with DedupLines {
       minJaccard: Double = 0.5,
       seed: Long = 42L,
       histBands: Option[DataFrame] = None): DataFrame = {
-    require(histBands.isEmpty || (numHashes > 0 && bands > 0),
-      "histBands requires explicit numHashes and bands — the persisted " +
-        "keys are only comparable under the exact knobs that built them")
-    val (nh, nb) = minhashKnobs(
-      histDocs.select(col(idCol)).count(), minJaccard, numHashes, bands)
+    val (batchKeys, hb) = incrementalBandKeys(newDocs, histDocs, textCol,
+      idCol, numHashes, bands, minJaccard, seed, histBands)
     val batchDocs = newDocs.select(col(idCol), col(textCol))
     // materialized ONCE (r19, guide §7.2): the batch band keys —
     // tokenize + minhash + banding — feed TWO consumers (the star
@@ -1207,10 +1131,7 @@ object Dedup extends DedupPassages with DedupLines {
     // 175 KB exchanges each fed by its own batch tokenize); the lazy
     // checkpoint replays compact (id, bk) rows instead. In-query, per
     // invocation; rows unchanged.
-    val batchBands = minhashBandKeys(newDocs, textCol, idCol, nh, nb, seed)
-      .localCheckpoint(false)
-    val hb = histBands.getOrElse(minhashBandKeys(
-      histDocs, textCol, idCol, nh, nb, seed))
+    val batchBands = batchKeys.localCheckpoint(false)
     // lineage cut (see [[minhashPairsStarFirst]]): the within-loser ids
     // feed the survivor anti-join AND the final drop union
     val withinLosers = ngramJaccard(batchDocs,
@@ -1220,10 +1141,7 @@ object Dedup extends DedupPassages with DedupLines {
       .select(col("id_b").as(idCol)).distinct()
       .localCheckpoint(false)
     val survBands = batchBands.join(withinLosers, Seq(idCol), "left_anti")
-    val cross = survBands.alias("x")
-      .join(hb.select(col(idCol), col("bk")).alias("y"),
-        col("x.bk") === col("y.bk"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
+    val cross = crossCandidates(survBands, hb, idCol)
       .distinct()
       // cut before the verify's triple reference (see the pairs path)
       .localCheckpoint(false)
@@ -1241,12 +1159,10 @@ object Dedup extends DedupPassages with DedupLines {
 
   // -------------------------------------------------------------- simhash
 
-  /** 64-bit SimHash per document, computed without UDFs: explode
-    * tokens, xxhash64 each, and sum each bit's ±1 contribution in one
-    * groupBy — a single shuffle keyed by doc id, partial-aggregated
-    * map-side. Near-dups then pair by Hamming distance on band-equal
-    * buckets (`bands` prefix blocks of the fingerprint).
-    */
+  /** 64-bit SimHash per document, computed without UDFs in one narrow
+    * codegen'd pass ([[simhashFingerprints]]). Near-dups then pair by
+    * Hamming distance on band-equal buckets (`bands` prefix blocks of
+    * the fingerprint). */
   def simhash(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", outputCol: String = "simhash"): DataFrame =
     simhashFingerprints(df, textCol, idCol, outputCol).drop("len_bucket")
@@ -1254,9 +1170,10 @@ object Dedup extends DedupPassages with DedupLines {
   /** [[simhash]] plus `len_bucket = floor(log2(token count))` — the
     * banding salt [[simhashPairs]] composes into its band keys. The
     * count rides the fingerprint's existing per-doc aggregation, so the
-    * salt is free (same single shuffle, one more agg slot). */
-  def simhashFingerprints(df: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", outputCol: String = "simhash"): DataFrame = {
+    * salt is free (same single pass, one more output column). */
+  private[graft] def simhashFingerprints(df: DataFrame,
+      textCol: String = "text", idCol: String = "doc_id",
+      outputCol: String = "simhash"): DataFrame = {
     // ONE narrow codegen'd pass: tokenize ([[graft.functions.WordNgrams]]
     // n=1 — the library's shared tokenization) and fold the Charikar
     // bit counters per row ([[graft.functions.SimhashSignature]]).
@@ -1307,10 +1224,7 @@ object Dedup extends DedupPassages with DedupLines {
     * deduplicated at runtime — the executed plan carries a
     * ReusedExchange (verify with SPARK_EXPLAIN_RUN=1 graft.Explain), so
     * the corpus is scanned/aggregated once. With AQE disabled that
-    * reuse is not guaranteed; compute [[simhashFingerprints]] once,
-    * persist it under YOUR lifecycle, and call
-    * [[simhashPairsFromFingerprints]] — the library deliberately never
-    * caches internally (no unpersist leaks). */
+    * reuse is not guaranteed. */
   def simhashPairs(df: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", maxHamming: Int = 3,
       bands: Int = 4, salted: Boolean = true): DataFrame =
@@ -1319,11 +1233,10 @@ object Dedup extends DedupPassages with DedupLines {
       saltCol = if (salted) Some("len_bucket") else None)
 
   /** [[simhashPairs]] over a precomputed `(idCol, simhash[, salt])`
-    * frame (see cost note there — persist `fps` yourself if recompute
-    * matters). `saltCol` names an integer bucket column to compose into
+    * frame. `saltCol` names an integer bucket column to compose into
     * the band key (the ±1-replicated composite described on
     * [[simhashPairs]]); None bands on the raw blocks alone. */
-  def simhashPairsFromFingerprints(fps: DataFrame,
+  private[graft] def simhashPairsFromFingerprints(fps: DataFrame,
       idCol: String = "doc_id", maxHamming: Int = 3,
       bands: Int = 4, saltCol: Option[String] = None): DataFrame = {
     require(maxHamming < bands,
@@ -1413,9 +1326,8 @@ object Dedup extends DedupPassages with DedupLines {
 
   /** [[simhashStar]] over a precomputed `(idCol, simhash[, salt])`
     * frame — the fingerprint-reuse seam the star-first compositions
-    * below build on (persist `fps` yourself when recompute matters,
-    * per the [[simhashPairs]] cost note). */
-  def simhashStarFromFingerprints(fps: DataFrame,
+    * below build on. */
+  private[graft] def simhashStarFromFingerprints(fps: DataFrame,
       idCol: String = "doc_id", maxHamming: Int = 3,
       bands: Int = 4, saltCol: Option[String] = None): DataFrame = {
     require(maxHamming < bands,
@@ -1453,22 +1365,6 @@ object Dedup extends DedupPassages with DedupLines {
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }
-
-  /** Keep-min STAR COLLAPSE — [[simhashStar]]'s links applied as a
-    * dedup: drops every doc with a qualifying link to a SMALLER id
-    * (links are (id_a < id_b), so the drop set is the distinct id_b
-    * side), returns the surviving `df` rows unchanged. On a
-    * high-duplication corpus this removes the replica mass in LINEAR
-    * time; the survivors are replica-free, which is exactly what makes
-    * a subsequent exhaustive pair pass affordable (see
-    * [[simhashPairsStarFirst]] / [[simhashVerifiedStarFirst]]). */
-  def simhashStarCollapse(df: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", maxHamming: Int = 3,
-      bands: Int = 4, salted: Boolean = true): DataFrame =
-    df.join(
-      simhashStar(df, textCol, idCol, maxHamming, bands, salted)
-        .select(col("id_b").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
 
   /** The PRODUCTION simhash pair relation (round-12, retiring the r11
     * sf1 finding for good): star-collapse first, banded pairs over the
@@ -1646,9 +1542,6 @@ object Dedup extends DedupPassages with DedupLines {
       .localCheckpoint(false)
   }
 
-  /** Banded candidate pairs with exact Hamming distance, BEFORE the
-    * `maxHamming` filter — package-visible so specs can measure bucket
-    * fan-out (the quantity the salt exists to bound) directly. */
   /** The exploded (id, simhash, bk) band rows shared by the pair join
     * ([[simhashCandidates]]) and the linear star reduction
     * ([[simhashStar]]). With a salt: replicate each doc's band rows at
@@ -1678,6 +1571,9 @@ object Dedup extends DedupPassages with DedupLines {
       explode(array(bandStructs: _*)).as("bk"))
   }
 
+  /** Banded candidate pairs with exact Hamming distance, BEFORE the
+    * `maxHamming` filter — package-visible so specs can measure bucket
+    * fan-out (the quantity the salt exists to bound) directly. */
   private[graft] def simhashCandidates(fps: DataFrame, idCol: String,
       bands: Int, saltCol: Option[String]): DataFrame = {
     val banded = bandedRows(fps, idCol, bands, saltCol)
@@ -1717,32 +1613,13 @@ object Dedup extends DedupPassages with DedupLines {
     * Duplicates for Web Crawling", WWW 2007). */
   private def multiprobeBandedRows(fps: DataFrame, idCol: String,
       saltCol: Option[String]): DataFrame = {
-    val bands = 4
-    val bits = 16
-    val mask = (1L << bits) - 1L
-    val variants = for { b <- 0 until bands; v <- 0 to bits } yield {
-      val block = shiftright(col("simhash"), b * bits).bitwiseAND(mask)
-      val key =
-        if (v == 0) block else block.bitwiseXOR(lit(1L << (v - 1)))
-      (v, struct(lit(b).as("band"), key.as("key")))
+    val salts = saltCol match {
+      case Some(sc) => (0 to 1).map(off => Seq((col(sc) + lit(off)).as("salt")))
+      case None => Seq(Nil)
     }
-    val probeStructs = saltCol match {
-      case Some(sc) =>
-        for { (v, bk0) <- variants; off <- 0 to 1 } yield
-          struct(
-            struct(bk0.getField("band").as("band"),
-              bk0.getField("key").as("key"),
-              (col(sc) + lit(off)).as("salt")).as("bk"),
-            lit(v == 0).as("exact"))
-      case None =>
-        variants.map { case (v, bk0) =>
-          struct(bk0.as("bk"), lit(v == 0).as("exact"))
-        }
-    }
-    fps.select(col(idCol), col("simhash"),
-      explode(array(probeStructs: _*)).as("p"))
-      .select(col(idCol), col("simhash"),
-        col("p.bk").as("bk"), col("p.exact").as("exact"))
+    multiprobeRows(fps, idCol,
+      for { (b, v, key) <- multiprobeLayout; salt <- salts } yield
+        struct(lit(b).as("band") +: key.as("key") +: salt: _*) -> (v == 0))
       // explicit exchange on the join/window key (the minhashBandKeys
       // discipline, load-bearing here): the 17× explode hides its row
       // growth from size estimates, so without the exchange the
@@ -1754,6 +1631,33 @@ object Dedup extends DedupPassages with DedupLines {
       // shuffle anywhere.
       .repartition(col("bk"))
   }
+
+  /** THE multiprobe layout, one `(band, flip, key)` per probe: each of
+    * the 4 16-bit blocks of `simhash` as-is (flip 0, the exact row) and
+    * with each of its 16 bits flipped (flip v flips bit v−1), band-major.
+    * [[multiprobeBandedRows]], [[exactBlockKeys]] and
+    * [[multiprobeProbeKeysFlagged]] all enumerate it; each keeps its
+    * own key encoding (struct keys vs flat `xxhash64(band, key)`), and
+    * the encodings must not be mixed — a changed encoding changes
+    * bucket order and with it the star links. */
+  private def multiprobeLayout: Seq[(Int, Int, Column)] = {
+    val bits = 16
+    val mask = (1L << bits) - 1L
+    for { b <- 0 until 4; v <- 0 to bits } yield {
+      val block = shiftright(col("simhash"), b * bits).bitwiseAND(mask)
+      (b, v, if (v == 0) block else block.bitwiseXOR(lit(1L << (v - 1))))
+    }
+  }
+
+  /** `(idCol, simhash, bk, exact)` rows, one per `(key, exact)` probe. */
+  private def multiprobeRows(fps: DataFrame, idCol: String,
+      probes: Seq[(Column, Boolean)]): DataFrame =
+    fps.select(col(idCol), col("simhash"),
+        explode(array(probes.map { case (bk, exact) =>
+          struct(bk.as("bk"), lit(exact).as("exact"))
+        }: _*)).as("p"))
+      .select(col(idCol), col("simhash"),
+        col("p.bk").as("bk"), col("p.exact").as("exact"))
 
   /** EXACT multiprobe block keys over a `(idCol, simhash)` frame — the
     * PERSISTABLE banding seam shared by the incremental twins (text
@@ -1770,16 +1674,11 @@ object Dedup extends DedupPassages with DedupLines {
     * candidate joins verify in-place — history text is NEVER
     * re-tokenized. */
   private[graft] def exactBlockKeys(fps: DataFrame,
-      idCol: String): DataFrame = {
-    val bands = 4
-    val bits = 16
-    val mask = (1L << bits) - 1L
+      idCol: String): DataFrame =
     fps.select(col(idCol), col("simhash"),
-      explode(array((0 until bands).map { b =>
-        xxhash64(lit(b),
-          shiftright(col("simhash"), b * bits).bitwiseAND(mask))
+      explode(array(multiprobeLayout.collect {
+        case (b, 0, key) => xxhash64(lit(b), key)
       }: _*)).as("bk"))
-  }
 
   /** Batch-side probe rows for [[exactBlockKeys]] histories: exact
     * block keys plus all 16 one-bit flips per band (68 rows per doc),
@@ -1806,21 +1705,10 @@ object Dedup extends DedupPassages with DedupLines {
     * plans its own Exchange on the extracted key, which a repartition
     * by the column cannot satisfy — the minhashBandedShingles rule. */
   private[graft] def multiprobeProbeKeysFlagged(fps: DataFrame,
-      idCol: String): DataFrame = {
-    val bands = 4
-    val bits = 16
-    val mask = (1L << bits) - 1L
-    val probeStructs = for { b <- 0 until bands; v <- 0 to bits } yield {
-      val block = shiftright(col("simhash"), b * bits).bitwiseAND(mask)
-      val key =
-        if (v == 0) block else block.bitwiseXOR(lit(1L << (v - 1)))
-      struct(xxhash64(lit(b), key).as("bk"), lit(v == 0).as("exact"))
-    }
-    fps.select(col(idCol), col("simhash"),
-        explode(array(probeStructs: _*)).as("p"))
-      .select(col(idCol), col("simhash"),
-        col("p.bk").as("bk"), col("p.exact").as("exact"))
-  }
+      idCol: String): DataFrame =
+    multiprobeRows(fps, idCol, multiprobeLayout.map {
+      case (b, v, key) => xxhash64(lit(b), key) -> (v == 0)
+    })
 
   /** Persistable history band keys for [[simhashIncremental]] —
     * [[exactBlockKeys]] over the corpus fingerprints. Compute ONCE on
@@ -1910,7 +1798,7 @@ object Dedup extends DedupPassages with DedupLines {
     * escape the star — it then simply SURVIVES into the pair stage,
     * whose multiprobe join is recall-complete, so escapes cost pair
     * rows, never correctness. */
-  def simhashStarFromFingerprintsMultiprobe(fps: DataFrame,
+  private[graft] def simhashStarFromFingerprintsMultiprobe(fps: DataFrame,
       idCol: String = "doc_id", maxHamming: Int = 6,
       saltCol: Option[String] = None): DataFrame = {
     require(maxHamming <= 7,
@@ -2257,33 +2145,18 @@ object Dedup extends DedupPassages with DedupLines {
       embeddingBandKeys(histVecs, embCol, idCol, tables, bits, seed))
     // both candidate joins consume the SAME batch band-key subtree; an
     // embeddingPairs(newVecs) call here would rebuild the pipeline
-    val cross = batchKeys.alias("x")
-      .join(histKeys.select(col(idCol), col("bk")).alias("y"),
-        col("x.bk") === col("y.bk"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
-    val within = batchKeys.alias("x")
-      .join(batchKeys.alias("y"), col("x.bk") === col("y.bk") &&
-        col(s"x.$idCol") < col(s"y.$idCol"))
-      .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
     val batchVecs = cleanVecs(newVecs, embCol, idCol)
     val allVecs = batchVecs.unionByName(cleanVecs(histVecs, embCol, idCol))
-    // ONE verification pass; pair kinds split by id_b (ids unique):
-    // id_b in the batch ⇒ within pair, id_b loses; else cross pair,
-    // the batch-side id_a loses
-    val verified = cross.unionByName(within).distinct()
+    // ONE verification pass over both pair kinds
+    val verified = crossCandidates(batchKeys, histKeys, idCol)
+      .unionByName(withinCandidates(batchKeys, idCol)).distinct()
       .join(batchVecs.select(col(idCol).as("id_a"), col("e").as("ea")),
         "id_a")
       .join(allVecs.select(col(idCol).as("id_b"), col("e").as("eb")),
         "id_b")
       .filter(CosineSimilarity(col("ea"), col("eb")) >= minCosine)
       .select("id_a", "id_b")
-    val batchIdsB = batchVecs.select(col(idCol).as("id_b"))
-    val withinLosers = verified.join(batchIdsB, Seq("id_b"), "left_semi")
-      .select(col("id_b").as(idCol))
-    val crossLosers = verified.join(batchIdsB, Seq("id_b"), "left_anti")
-      .select(col("id_a").as(idCol))
-    newVecs.join(withinLosers.union(crossLosers).distinct(),
-      Seq(idCol), "left_anti")
+    incrementalSurvivors(newVecs, batchVecs, verified, idCol)
   }
 
 

@@ -30,23 +30,6 @@ class CurateSpec extends SparkSpec {
     assert(out.filter(col("doc_id") === 900002L).count() == 0) // German
   }
 
-  test("curate withNearDedup: near-dup copy suppressed on top of exact stage") {
-    val s = spark
-    import s.implicits._
-    val base = Curate(docs).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    // plant a near-copy (one-word edit) of a kept doc with a larger id
-    val keptId = base.min
-    val text = docs.filter(col("doc_id") === keptId).head().getAs[String]("text")
-    val words = text.split(" ")
-    val edited = (words.take(words.length - 1) :+ "zzzedit").mkString(" ")
-    val extended = docs.select("doc_id", "text")
-      .unionByName(Seq((900100L, edited)).toDF("doc_id", "text"))
-    val out = Curate.withNearDedup(extended, minJaccard = 0.5)
-    assert(out.filter(col("doc_id") === keptId).count() == 1)
-    assert(out.filter(col("doc_id") === 900100L).count() == 0)
-  }
-
   test("repeatUpsample: factors replicate with dense copy_idx, " +
       "factor 0 drops, unlisted sources take the default") {
     val s = spark

@@ -187,19 +187,30 @@ class DedupSpec extends SparkSpec {
     assert(pairs.filter(col("id_a") >= col("id_b")).count() == 0)
   }
 
-  test("minhashPairs agrees with the MLlib LSH cross-check on the planted pair") {
-    val banded = Dedup.minhashPairs(planted, minJaccard = 0.5)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val mllib = Dedup.minhashPairsLsh(planted, jaccardDist = 0.5)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(banded.contains((1L, 100001L)))
-    assert(mllib.contains((1L, 100001L)))
-  }
-
-  test("minhash: suppresses the larger-id member of a near-dup pair") {
-    val out = Dedup.minhash(planted, minJaccard = 0.5)
-    assert(out.filter(col("doc_id") === 1L).count() == 1)
-    assert(out.filter(col("doc_id") === 100001L).count() == 0)
+  test("shared key formats: batch and streaming minhash band keys match; " +
+      "exact block keys are the exact multiprobe probe rows") {
+    def multiset(df: DataFrame): Map[Seq[Any], Int] =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity)
+        .map { case (k, v) => k -> v.size }
+    // persisted history tables (minhashBandKeys), the streaming keeper
+    // (minhashBandedShingles) and the batch star-first paths must collide
+    // on bit-identical band keys, at the defaults and at other knobs
+    Seq((64, 16), (40, 8)).foreach { case (nh, nb) =>
+      val batch = multiset(Dedup.minhashBandKeys(docs,
+        numHashes = nh, bands = nb).select("doc_id", "bk"))
+      val stream = multiset(Dedup.minhashBandedShingles(docs,
+        numHashes = nh, bands = nb).select("doc_id", "bk"))
+      assert(batch.nonEmpty)
+      assert(batch == stream, s"band keys diverge at ($nh, $nb)")
+    }
+    // persisted simhash histories hold exact block keys; the batch and
+    // streaming probes must reproduce them on their unflipped rows
+    val fps = Dedup.simhashFingerprints(docs).select("doc_id", "simhash")
+    val exact = multiset(Dedup.exactBlockKeys(fps, "doc_id"))
+    val probes = multiset(Dedup.multiprobeProbeKeysFlagged(fps, "doc_id")
+      .filter(col("exact")).drop("exact"))
+    assert(exact.nonEmpty)
+    assert(exact == probes)
   }
 
   test("simhash: one-word edit keeps Hamming distance small") {
@@ -445,10 +456,6 @@ class DedupSpec extends SparkSpec {
     val labels = Dedup.connectedComponents(chain, maxIter = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == 21 && labels.values.forall(_ == 0L))
-    // opting out of the fallback keeps the fail-fast contract
-    intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxIter = 3, starFallback = false)
-    }
   }
 
   test("embeddingIncremental: drops batch vecs near history, keeps novel ones") {
@@ -686,14 +693,11 @@ class DedupSpec extends SparkSpec {
         (col("doc_id") + lit(k * 1000000L)).as("doc_id"),
         concat(col("text"), lit(s" r$k")).as("text"))
     }.reduce(_ unionByName _)
-    val survivors = Dedup.simhashStarCollapse(replicated, maxHamming = 3)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val starDrops = Dedup.simhashStar(replicated, maxHamming = 3)
-      .select("id_b").distinct().collect().map(_.getLong(0)).toSet
-    // collapse = corpus minus the star drop set, nothing else
-    assert(survivors ==
-      replicated.select("doc_id").collect().map(_.getLong(0)).toSet
-        -- starDrops)
+    def starDrops(maxHamming: Int) =
+      Dedup.simhashStar(replicated, maxHamming = maxHamming)
+        .select("id_b").distinct().collect().map(_.getLong(0)).toSet
+    // the collapse survivors: the corpus minus the star drop set
+    val survivors = allIdsOf(replicated) -- starDrops(3)
     // the production pair relation IS the raw (quadratic, un-benched
     // ground truth) relation restricted to survivor×survivor — the
     // banding/knob paths cannot drift apart without failing here
@@ -711,8 +715,7 @@ class DedupSpec extends SparkSpec {
     // the registered pairs row collapses TIGHTER (Hamming ≤ 2) than it
     // enumerates (≤ 3) — the same restriction property must hold with
     // the thresholds split
-    val surv2 = Dedup.simhashStarCollapse(replicated, maxHamming = 2)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val surv2 = allIdsOf(replicated) -- starDrops(2)
     val starFirst2 = Dedup.simhashPairsStarFirst(replicated,
       maxHamming = 3, collapseHamming = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -769,6 +772,14 @@ class DedupSpec extends SparkSpec {
   private def allIdsOf(df: DataFrame): Set[Long] =
     df.select("doc_id").collect().map(_.getLong(0)).toSet
 
+  /** Verified minhash star links `(id_a < id_b, jaccard)` at the
+    * default knobs: the band-key star links checked by exact n-gram
+    * Jaccard — the collapse edges the star-first operators drop by. */
+  private def minhashStarLinks(df: DataFrame, minJaccard: Double): DataFrame =
+    Dedup.ngramJaccard(df,
+        Dedup.minhashStarFromBandKeys(Dedup.minhashBandKeys(df)))
+      .filter(col("jaccard") >= minJaccard)
+
   test("minhashStar: replica groups collapse to keep-min links, drop set " +
       "== pair-based keep-min, and the link plan has NO self-join") {
     val s = spark
@@ -783,7 +794,7 @@ class DedupSpec extends SparkSpec {
         (col("doc_id") + lit(k * 1000000L)).as("doc_id"),
         concat(col("text"), lit(s" r$k")).as("text"))
     }.reduce(_ unionByName _)
-    val star = Dedup.minhashStar(replicated, minJaccard = 0.5)
+    val star = minhashStarLinks(replicated, 0.5)
     val starDrops = star.select("id_b").distinct()
       .collect().map(_.getLong(0)).toSet
     // pair-based keep-min ground truth at the same knobs
@@ -826,13 +837,11 @@ class DedupSpec extends SparkSpec {
         (col("doc_id") + lit(k * 1000000L)).as("doc_id"),
         concat(col("text"), lit(s" r$k")).as("text"))
     }.reduce(_ unionByName _)
-    val allIds = replicated.select("doc_id").collect().map(_.getLong(0)).toSet
-    val starDrops = Dedup.minhashStar(replicated, minJaccard = 0.5)
+    val allIds = allIdsOf(replicated)
+    def starDrops(minJaccard: Double) = minhashStarLinks(replicated, minJaccard)
       .select("id_b").distinct().collect().map(_.getLong(0)).toSet
-    val survivors = Dedup.minhashStarCollapse(replicated, minJaccard = 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    // collapse = corpus minus the star drop set, nothing else
-    assert(survivors == allIds -- starDrops)
+    // the collapse survivors: the corpus minus the star drop set
+    val survivors = allIds -- starDrops(0.5)
     // the production pair relation IS the raw (quadratic, un-benched
     // ground truth) relation restricted to survivor×survivor
     val rawPairs = Dedup.minhashPairs(replicated, minJaccard = 0.5)
@@ -850,8 +859,7 @@ class DedupSpec extends SparkSpec {
     // the registered pairs row collapses TIGHTER (0.95) than it
     // enumerates (0.2) — the restriction property must hold with the
     // thresholds split too
-    val surv9 = Dedup.minhashStarCollapse(replicated, minJaccard = 0.9)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val surv9 = allIds -- starDrops(0.9)
     val starFirst9 = Dedup.minhashPairsStarFirst(replicated,
       minJaccard = 0.5, collapseJaccard = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
